@@ -5,6 +5,7 @@
         --seed N --seconds S --trace {0,1}
     python3 perfbench/run.py --selftest
     python3 perfbench/run.py --audit --seed N --seconds S
+    python3 perfbench/run.py --sweep --seed N --seconds S
 
 A run builds the program if needed (perfbench/build.py), writes seeded
 inputs (perfbench/datagen.py) into a private run dir, drives the workload
@@ -120,15 +121,14 @@ def declared_metrics(trace):
     return spec["per_layer" if trace else "end_to_end"]
 
 
-def run_jvm(classes, workload, seed, seconds, trace, run_dir, deadline):
+def run_jvm(classes, workload, seed, seconds, trace, run_dir, deadline, txn_rate=None):
     cp = os.pathsep.join([classes] + build.spark_classpath())
-    # traced runs keep deep call sites, so jobs are attributed to the
-    # program file that started them
-    depth = ["-Dspark.callstack.depth=200"] if trace else []
-    cmd = ["java"] + JVM_OPTS + depth + [f"-Djava.io.tmpdir={run_dir}/tmp", "-cp", cp, "perfbench.Main",
+    cmd = ["java"] + JVM_OPTS + [f"-Djava.io.tmpdir={run_dir}/tmp", "-cp", cp, "perfbench.Main",
                                  "--workload", workload, "--seed", str(seed),
                                  "--seconds", str(seconds), "--trace", "1" if trace else "0",
                                  "--run-dir", run_dir]
+    if txn_rate:
+        cmd += ["--txn-rate", str(txn_rate)]
     with open(os.path.join(run_dir, "jvm.log"), "w") as log:
         proc = subprocess.Popen(cmd, stdout=log, stderr=subprocess.STDOUT)
         try:
@@ -155,7 +155,7 @@ def new_run_dir(workload, seed, trace):
     return run_dir
 
 
-def run(workload, seed, seconds, trace):
+def run(workload, seed, seconds, trace, txn_rate=None):
     """One benchmark run; returns (exit code, final result dict)."""
     started = time.time()
     record = {"workload": workload, "seed": seed, "seconds": seconds, "trace": trace,
@@ -169,15 +169,19 @@ def run(workload, seed, seconds, trace):
     run_dir = new_run_dir(workload, seed, trace)
     try:
         datagen.write(seed, os.path.join(run_dir, "data"))
-        res = run_jvm(classes, workload, seed, seconds, trace, run_dir, deadline)
+        t_jvm = time.time()
+        res = run_jvm(classes, workload, seed, seconds, trace, run_dir, deadline, txn_rate)
+        record["jvm_s"] = time.time() - t_jvm
         record["tmp_bytes_left"] = dir_bytes(os.path.join(run_dir, "tmp"))
         failures = list(res["failures"])
         failed = res["failed"]
         attempted = res["attempted"]
         if res["dumped"]:
+            t_oracle = time.time()
             verdict, log = oracle_gate(res["record"].get("data_dir", os.path.join(run_dir, "data")),
                                        os.path.join(run_dir, "out"))
             record["oracle"] = verdict
+            record["oracle_s"] = time.time() - t_oracle
             for name, ok in verdict.items():
                 attempted += 1
                 if not ok:
@@ -281,6 +285,33 @@ def audit(seed, seconds):
     return 0
 
 
+SWEEP_RATES = (2, 4, 8, 16, 32, 64)
+
+
+def sweep(seed, seconds):
+    """Runs txn_service at rising offered rates and records where the
+    service stops keeping up; writes perfbench/txn_sweep.json."""
+    rows = []
+    for rate in SWEEP_RATES:
+        code, final = run("txn_service", seed, seconds, False, rate)
+        with open(os.path.join(ROOT, ".bench_out", f"txn_service-seed{seed}-trace0.json")) as fh:
+            r = json.load(fh)
+        m = r["metrics"]
+        batch = sorted(r["batch_ms"]) or [0]
+        rows.append({"offered_txn_per_s": rate, "correct": code == 0, "failed": final["failed"],
+                     "txn_complete_p50_ms": m["txn_complete_p50_ms"]["value"],
+                     "txn_complete_tail_ms": m.get("txn_complete_tail_ms", {}).get("value"),
+                     "txn_completed_per_s": m["txn_completed_per_s"]["value"],
+                     "batch_ms_p50": batch[len(batch) // 2], "batch_ms_max": batch[-1],
+                     "batch_input_rows_max": max(r["batch_input_rows"] or [0]),
+                     "generator_lag_ms_p50": r["generator_lag_ms_p50"],
+                     "generator_lag_ms_max": r["generator_lag_ms_max"]})
+        print(json.dumps(rows[-1]))
+    with open(os.path.join(HERE, "txn_sweep.json"), "w") as fh:
+        json.dump({"seed": seed, "seconds": seconds, "cores": os.cpu_count(), "rates": rows}, fh, indent=1)
+    return 0
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--workload", choices=WORKLOADS)
@@ -289,11 +320,14 @@ def main():
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--selftest", action="store_true")
     ap.add_argument("--audit", action="store_true")
+    ap.add_argument("--sweep", action="store_true")
     a = ap.parse_args()
     if a.selftest:
         return selftest()
     if a.audit:
         return audit(a.seed, a.seconds)
+    if a.sweep:
+        return sweep(a.seed, a.seconds)
     if not a.workload:
         ap.error("--workload is required")
     code, final = run(a.workload, a.seed, a.seconds, bool(a.trace))

@@ -12,12 +12,15 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
 /** Process-wide counts of filesystem requests by kind. Each count is one
-  * client call that an object store would bill as one request. */
+  * client call that an object store would bill as one request. Requests
+  * are counted only while `enabled` is set (a traced phase), so the
+  * untraced passes of a traced run do not pay for counting. */
 object FsCounters {
   val Ops: Seq[String] = Seq("list", "status", "open", "create", "rename", "delete", "mkdirs")
   private val counters = Ops.map(_ -> new AtomicLong).toMap
+  @volatile var enabled = false
 
-  def inc(op: String): Unit = counters(op).incrementAndGet()
+  def inc(op: String): Unit = if (enabled) counters(op).incrementAndGet()
 
   def snapshot(): Map[String, Long] = counters.map { case (k, v) => k -> v.get }
 

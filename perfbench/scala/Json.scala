@@ -1,36 +1,14 @@
 package perfbench
 
-/** Minimal JSON writer for the run record, plus the one parse it needs. */
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.Serialization
+
+/** JSON for the run record and the trace, through json4s. */
 object Json {
-  def str(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  private implicit val formats: Formats = DefaultFormats
 
-  def write(v: Any): String = v match {
-    case null | None => "null"
-    case Some(x) => write(x)
-    case s: String => str(s)
-    case b: Boolean => b.toString
-    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
-    case f: Float => write(f.toDouble)
-    case n: Int => n.toString
-    case n: Long => n.toString
-    case m: scala.collection.Map[_, _] =>
-      m.map { case (k, x) => str(k.toString) + ":" + write(x) }.mkString("{", ",", "}")
-    case xs: Iterable[_] => xs.map(write).mkString("[", ",", "]")
-    case xs: Array[_] => write(xs.toSeq)
-    case p: Product => write(p.productElementNames.zip(p.productIterator).toSeq.toMap)
-    case other => str(other.toString)
-  }
+  /** Maps, sequences, options and case classes as JSON; NaN becomes null. */
+  def write(v: AnyRef): String = Serialization.write(v)
 
-  def parseLongMap(json: String): Map[String, Long] = {
-    implicit val formats: org.json4s.Formats = org.json4s.DefaultFormats
-    org.json4s.jackson.Serialization.read[Map[String, Long]](json)
-  }
+  def parseLongMap(json: String): Map[String, Long] = Serialization.read[Map[String, Long]](json)
 }

@@ -7,6 +7,9 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.PerfbenchBus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, from_json, timestamp_micros}
@@ -15,7 +18,8 @@ import org.apache.spark.sql.types.StructType
 import graft.sources.{GraftShards, Sources}
 import graft.streaming.Correlate
 
-final case class Opts(workload: String, seed: Long, seconds: Int, trace: Boolean, runDir: String)
+final case class Opts(workload: String, seed: Long, seconds: Int, trace: Boolean, runDir: String,
+    txnRate: Int)
 
 /** One benchmark call into the program. Times are epoch milliseconds. */
 final case class CallRec(id: String, name: String, pass: Int, start: Double, end: Double,
@@ -28,13 +32,16 @@ final case class Window(start: Double, end: Double, jobs: Seq[JobRec], batches: 
     fs: Map[String, Long], bytesWritten: Long, gcMs: Long, heapPeakMb: Double)
 
 /** Entry point: `perfbench.Main --workload W --seed N --seconds S --trace 0|1
-  * --run-dir DIR`. The run dir holds the generated inputs in `data/`; the
-  * result lands in `result.json` there, and query outputs for the oracle
-  * gate in `out/`. */
+  * --run-dir DIR [--txn-rate R]`. The run dir holds the generated inputs in
+  * `data/`; the result lands in `result.json` there, and query outputs for
+  * the oracle gate in `out/`. */
 object Main {
   val Cores = 4
   /** Set-ups per run; `setup_s` is their median. */
   val Setups = 3
+  /** Offered txn_service load, new transactions per second: half the
+    * knee rate that `run.py --sweep` measures (perfbench/README.md). */
+  val TxnRate = 4
 
   /** The session conf graft.Bench runs the registry with. */
   val BenchConf: Seq[(String, String)] = Seq(
@@ -48,7 +55,8 @@ object Main {
 
   def parse(argv: Array[String]): Opts = {
     val m = argv.grouped(2).collect { case Array(k, v) if k.startsWith("--") => k.drop(2) -> v }.toMap
-    Opts(m("workload"), m("seed").toLong, m("seconds").toInt, m("trace") == "1", m("run-dir"))
+    Opts(m("workload"), m("seed").toLong, m("seconds").toInt, m("trace") == "1", m("run-dir"),
+      m.get("txn-rate").map(_.toInt).getOrElse(TxnRate))
   }
 
   def session(o: Opts): SparkSession = {
@@ -123,7 +131,7 @@ final class Bench(val spark: SparkSession, o: Opts) {
   /** Records one self-test outcome; a failed check fails the run. */
   def check(name: String, ok: Boolean, detail: Any): Unit = {
     attempted += 1
-    record(s"selftest.$name") = Map("ok" -> ok, "detail" -> detail)
+    record(s"selftest.$name") = Map("ok" -> ok, "detail" -> String.valueOf(detail))
     if (!ok) fail(s"selftest $name: $detail")
   }
 
@@ -179,6 +187,21 @@ final class Bench(val spark: SparkSession, o: Opts) {
     ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1e6
   }
 
+  private def jitMs(): Long = Option(ManagementFactory.getCompilationMXBean)
+    .filter(_.isCompilationTimeMonitoringSupported).map(_.getTotalCompilationTime).getOrElse(0L)
+
+  /** Runs the untraced timed phase `body` from a settled heap (Spark's
+    * context cleaner has dropped what the warm-up left) and records the
+    * GC and JIT time spent inside it. */
+  private def timedPhase[A](body: => A): A = {
+    for (_ <- 0 until 2) { System.gc(); Thread.sleep(200) }
+    val (gc0, jit0) = (gcMs(), jitMs())
+    val a = body
+    record("timed_gc_ms") = gcMs() - gc0
+    record("timed_jit_ms") = jitMs() - jit0
+    a
+  }
+
   private def recordSetups(times: Seq[Double]): Unit = {
     metric("setup_s", Stats.median(times), "s")
     record("setup_runs_s") = times
@@ -194,7 +217,10 @@ final class Bench(val spark: SparkSession, o: Opts) {
 
   // ---- tracing -------------------------------------------------------------
 
-  /** Runs `body` with the job listener attached and returns what it saw. */
+  /** Runs `body` traced and returns what it saw: the job listener is
+    * attached, fs requests are counted and call sites are kept deep (so a
+    * job is attributed to the program file that started it) only for the
+    * length of `body`. */
   def traced[A](body: => A): (A, Window) = {
     val sc = spark.sparkContext
     PerfbenchBus.drain(sc)
@@ -204,8 +230,15 @@ final class Bench(val spark: SparkSession, o: Opts) {
     val gc0 = gcMs()
     val fs0 = FsCounters.snapshot()
     val bw0 = FsCounters.bytesWritten()
+    System.setProperty("spark.callstack.depth", "200")
+    FsCounters.enabled = true
     val t0 = Clock.nowMs
-    val a = body
+    val a =
+      try body
+      finally {
+        FsCounters.enabled = false
+        System.clearProperty("spark.callstack.depth")
+      }
     val t1 = Clock.nowMs
     PerfbenchBus.drain(sc)
     sc.removeSparkListener(rec.sparkListener)
@@ -339,6 +372,19 @@ final class Bench(val spark: SparkSession, o: Opts) {
     (calls.toSeq, spans.toSeq)
   }
 
+  /** One traced pass, then one untraced pass. The overhead compares the
+    * traced pass with the untraced one after it, which the JIT has warmed
+    * at least as much, so warming cannot hide tracing cost. Returns every
+    * call, the traced pass's calls and span, what the traced pass saw, and
+    * the overhead in percent. */
+  private def tracedPass(ops: Seq[String])(run: String => Long) = {
+    val ((c1, s1), w) = traced(passes(ops, 0, 0, 1)(run))
+    val (c2, s2) = passes(ops, 0, 1, 1)(run)
+    val (tracedS, after) = (passStats(c1, s1)._2.head, passStats(c2, s2)._2.head)
+    record("pass_s") = Map("traced" -> tracedS, "untraced_after" -> after)
+    (c1 ++ c2, c1, s1, w, overheadPct(tracedS, after))
+  }
+
   /** Checks every timed call: it must succeed and return the row count the
     * reference call returned. */
   private def checkCalls(calls: Seq[CallRec], expectRows: Map[String, Long]): Unit = {
@@ -350,11 +396,17 @@ final class Bench(val spark: SparkSession, o: Opts) {
     }
   }
 
-  /** Writes one result for the DuckDB oracle gate. */
+  /** Writes one result for the DuckDB oracle gate; its row count comes
+    * from the parquet footers, without another Spark job. */
   def dump(name: String, df: DataFrame): Unit = {
     val path = s"$outDir/$name"
     df.coalesce(1).write.mode("overwrite").parquet(path)
-    dumped(name) = spark.read.parquet(path).count()
+    val conf = spark.sparkContext.hadoopConfiguration
+    dumped(name) = Files.list(Paths.get(path)).iterator.asScala.filter(_.toString.endsWith(".parquet"))
+      .map { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(f.toString), conf))
+        try r.getRecordCount finally r.close()
+      }.sum
   }
 
   private def writeOracleSql(names: Seq[String]): Unit = {
@@ -370,30 +422,37 @@ final class Bench(val spark: SparkSession, o: Opts) {
   // ---- analytics -----------------------------------------------------------
 
   /** Read-only registry queries: relational, dedup, similarity, text,
-    * the document pipeline (q21-q24) and multimodal, plus the z-store
-    * read and the upsert-table keyed read. */
+    * the document pipeline (q21-q24), multimodal and graph (q101, the
+    * cheapest graph query), plus the z-store read, the upsert-table keyed
+    * read and the IVF, BM25 and IVF-PQ index reads. */
   val AnalyticsQueries: Seq[String] = Seq(
     "q01_pricing_summary", "q42_dedup_minhash_lsh", "q50_knn_brute", "q60_text_tokens",
     "q21_doc_pipeline", "q22_status_events", "q23_correlate", "q24_point_lookup",
-    "q70_multimodal_meta", "q123_zorder_read", "q78_keyed_lookup")
+    "q70_multimodal_meta", "q101_triangle_count", "q123_zorder_read", "q78_keyed_lookup",
+    "q107_ann_index", "q113_bm25_index", "q121_pq_index")
   /** The query whose first call for a data dir builds the z-store (build,
-    * append and manifest compaction). The upsert table behind q78 is built
-    * by the untimed first pass. */
+    * append and manifest compaction). The upsert table behind q78 and the
+    * IVF, BM25 and IVF-PQ index stores behind q107, q113 and q121 are
+    * built by the untimed first pass. */
   val AnalyticsFixtures: Seq[String] = Seq("q123_zorder_read")
 
   def analytics(): Unit = {
     def q(name: String, d: String): DataFrame = registry(name).fn(spark, d)
     val dirs = (0 until Setups).map(copyData)
-    recordSetups(dirs.map(d => timed(AnalyticsFixtures.foreach(n => q(n, d).count()))._2))
+    recordSetups(dirs.map(dir => timed(AnalyticsFixtures.foreach(n => q(n, dir).count()))._2))
     val d = dirs.last
-    // the untimed first pass writes every result for the oracle gate; the
-    // timed calls must return the same row counts
+    // the untimed first pass builds the other fixtures of the dir the
+    // passes read (the index stores, the upsert table) and writes every
+    // result for the oracle gate; the timed calls must return the same
+    // row counts
     writeOracleSql(AnalyticsQueries)
-    record("warmup_s") = timed(AnalyticsQueries.foreach(n => dump(n, q(n, d))))._2
+    val firstCalls = AnalyticsQueries.map(n => n -> timed(dump(n, q(n, d)))._2)
+    record("warmup_s") = firstCalls.map(_._2).sum
+    record("first_call_s") = firstCalls.toMap
     val warm = dumped.toMap
     val run = (n: String) => q(n, d).count()
     if (!o.trace) {
-      val (calls, spans) = passes(AnalyticsQueries, o.seconds, 0, Int.MaxValue)(run)
+      val (calls, spans) = timedPhase(passes(AnalyticsQueries, o.seconds, 0, Int.MaxValue)(run))
       metric("retained_heap_mb", retainedHeapMb(), "MB")
       checkCalls(calls, warm)
       val (ms, passS) = passStats(calls, spans)
@@ -407,13 +466,9 @@ final class Bench(val spark: SparkSession, o: Opts) {
       record("passes") = spans.size
       record("per_query_p50_ms") = calls.groupBy(_.name).map { case (k, cs) => k -> Stats.median(cs.map(_.ms)) }
     } else {
-      val (c0, s0) = passes(AnalyticsQueries, o.seconds / 2.0, 0, Int.MaxValue)(run)
-      val ((c1, s1), w) = traced(passes(AnalyticsQueries, 0, s0.size, 1)(run))
-      checkCalls(c0 ++ c1, warm)
-      val untraced = Stats.median(passStats(c0, s0)._2)
-      val tracedS = passStats(c1, s1)._2.head
-      summarise(w, c1, s1, dirBytes(d),
-        Map("trace.overhead_pct" -> overheadPct(tracedS, untraced)))
+      val (all, c1, s1, w, overhead) = tracedPass(AnalyticsQueries)(run)
+      checkCalls(all, warm)
+      summarise(w, c1, s1, dirBytes(d), Map("trace.overhead_pct" -> overhead))
     }
     record("data_dir") = d
   }
@@ -436,7 +491,7 @@ final class Bench(val spark: SparkSession, o: Opts) {
     record("warmup_s") = warmS
     record("input_rows_per_loop") = docRows
     if (!o.trace) {
-      val (calls, spans) = passes(IngestLoops, o.seconds, 0, Int.MaxValue)(run)
+      val (calls, spans) = timedPhase(passes(IngestLoops, o.seconds, 0, Int.MaxValue)(run))
       metric("retained_heap_mb", retainedHeapMb(), "MB")
       checkCalls(calls, warm)
       val (ms, passS) = passStats(calls, spans)
@@ -448,11 +503,9 @@ final class Bench(val spark: SparkSession, o: Opts) {
       record("ingest_pass_s") = passS
       record("per_loop_ms") = calls.groupBy(_.name).map { case (k, cs) => k -> cs.map(_.ms) }
     } else {
-      val (c0, s0) = passes(IngestLoops, o.seconds / 2.0, 0, Int.MaxValue)(run)
-      val ((c1, s1), w) = traced(passes(IngestLoops, 0, s0.size, 1)(run))
-      checkCalls(c0 ++ c1, warm)
-      summarise(w, c1, s1, shardBytes * IngestLoops.size,
-        Map("trace.overhead_pct" -> overheadPct(passStats(c1, s1)._2.head, Stats.median(passStats(c0, s0)._2))))
+      val (all, c1, s1, w, overhead) = tracedPass(IngestLoops)(run)
+      checkCalls(all, warm)
+      summarise(w, c1, s1, shardBytes * IngestLoops.size, Map("trace.overhead_pct" -> overhead))
     }
     writeOracleSql(IngestLoops)
     IngestLoops.foreach(n => dump(n, last(n)))
@@ -464,8 +517,6 @@ final class Bench(val spark: SparkSession, o: Opts) {
 
   // ---- txn_service ---------------------------------------------------------
 
-  /** Offered load: new transactions per second, a fixed schedule. */
-  val TxnRate = 8
   /** Share of terminal events delivered a second time. */
   val DupShare = 0.1
   val WarmTxns = 8
@@ -573,10 +624,10 @@ final class Bench(val spark: SparkSession, o: Opts) {
     // the schedule: txn i starts at i / rate; its terminal follows after a
     // seeded pipeline delay; a seeded share of terminals is sent twice
     val t0 = Clock.nowMs + 200
-    val nTxn = o.seconds * TxnRate
+    val nTxn = o.seconds * o.txnRate
     val schedule = (0 until nTxn).flatMap { i =>
       val txn = f"t${o.seed}%d-$i%05d"
-      val start = t0 + i * 1000.0 / TxnRate
+      val start = t0 + i * 1000.0 / o.txnRate
       val end = start + 200 + rng.nextInt(1300)
       val status = if (rng.nextDouble() < 0.8) "SUCCEEDED" else "FAILED"
       val dup = rng.nextDouble() < DupShare
@@ -598,7 +649,6 @@ final class Bench(val spark: SparkSession, o: Opts) {
       e.appendMs = Clock.nowMs - a0
     }, "perfbench-generator")
     val reader = new Thread(() => {
-      var n = 0
       while (Clock.nowMs < windowEnd) {
         val done = st.completedSnapshot
         if (done.isEmpty) Thread.sleep(5)
@@ -609,7 +659,6 @@ final class Bench(val spark: SparkSession, o: Opts) {
             case other => throw new IllegalStateException(s"${e.txn}: served $other, expected ${e.status}")
           })
           lookups.synchronized(lookups += ((c, c.start >= traceFrom)))
-          n += 1
         }
       }
     }, "perfbench-reader")
@@ -655,13 +704,21 @@ final class Bench(val spark: SparkSession, o: Opts) {
     val lookMs = lookups.map(_._1.ms).toSeq
     val evs = st.events.filter(_.due >= t0)
     val lastCommit = (t0 +: latency.map(_._1.commitMs).toSeq).max
-    record("offered_txn_per_s") = TxnRate
+    record("offered_txn_per_s") = o.txnRate
     record("generator_lag_ms_max") = (0.0 +: evs.map(_.lagMs)).max
     record("generator_lag_ms_p50") = if (evs.isEmpty) 0.0 else Stats.median(evs.map(_.lagMs))
     record("lookups") = lookups.size
+    // the service's micro-batches in the window: once they take longer
+    // than the trigger interval, each starts late and latency grows
+    val serviceBatches = rec.batches.asScala.filter(b => b.queryId == query.id.toString && b.start >= t0).toSeq
+    record("batch_ms") = serviceBatches.map(_.durations.getOrElse("triggerExecution", 0L))
+    record("batch_input_rows") = serviceBatches.map(_.inputRows)
     if (!o.trace) {
       metric("retained_heap_mb", heap, "MB")
       metric("op_p50_ms", Stats.median(lat), "ms")
+      // under the fixed schedule the completion rate mostly reads the
+      // generator: it only checks that completions keep up with the offered
+      // rate, and op_p50_ms is the gate on completion latency
       metric("throughput_per_s", latency.size / ((lastCommit - t0) / 1e3), "1/s")
       metric("txn_complete_p50_ms", Stats.median(lat), "ms")
       recordTail("txn_complete", lat, "ms")

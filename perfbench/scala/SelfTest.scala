@@ -38,6 +38,9 @@ object SelfTest {
     val jobs = Seq(c0, c1).map(c => w.jobs.count(_.callId.contains(c.id)))
     b.check("job_attribution", jobs(1) - jobs(0) == 1, jobs)
     b.check("fs_counting", c0.fs("open") >= 1 && w.fs.values.sum >= c0.fs.values.sum, c0.fs)
+    // outside a traced phase the counting filesystem only passes through
+    val untraced = b.call("untraced", 0)(plain())
+    b.check("fs_counting_off_untraced", untraced.fs.values.forall(_ == 0), untraced.fs)
 
     // the correctness gate: a clean dump and one with a single corrupted row
     val q = graft.SparkEntry.registry.find(_.name == "q01_pricing_summary").get

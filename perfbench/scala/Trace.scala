@@ -56,8 +56,7 @@ final case class BatchRec(queryId: String, runId: String, name: String, batchId:
   * first of these files found on its call-site stack. */
 object Modules {
   val Files: Seq[String] = Seq("ZOrder", "LshIndex", "VecIndex", "PqIndex", "TextIndex",
-    "Sources", "GraftShards", "StoreMaint", "Graph", "Dedup", "Similarity", "Relational",
-    "Relational2", "TextAnalysis")
+    "Sources", "Graph", "Dedup", "Similarity", "Relational", "TextAnalysis")
   private val Frame = """\(([A-Za-z0-9_]+)\.scala:\d+\)""".r
 
   def of(callSiteLong: String): String =
